@@ -356,44 +356,6 @@ def _reset_caches(spark) -> None:
     _jvm_gc(spark)
 
 
-def _recycle_session(spark, qs):
-    """Mid-suite session recycle (VERDICT r8 directive #3): with 180+
-    benched entries the in-suite variance band (steady-pass totals
-    spanned 290-318 s in r8) exceeded most real round-over-round
-    deltas — heap/JIT context accumulated over a whole pass taxes the
-    tail entries. Stopping the SparkContext drops every executor
-    block, cache, and shuffle file; the fresh context starts the
-    second half of each pass from a clean heap (the JVM — and its JIT
-    code cache — persists, so no recompile storm). The fresh session
-    is WARMED before timing resumes (range-sum + one parquet-scanning
-    query, the same warmup the suite start gets) — the first r9 run
-    skipped this and every post-midpoint entry paid fresh-session
-    scan/codegen costs each pass (median entry ratio 1.22x vs r8,
-    review_stats_overall 4.4x). Runs OUTSIDE any timed region.
-
-    MEASURED OUTCOME (r9, default now OFF): with the warmup the
-    in-suite total still ran ~+20% over r8 (386.6 s vs 300.7 + ~20 s
-    of new entries) while the ISOLATED reprobe sat exactly at r8
-    levels (personalized_pagerank 3.28 vs 3.32, table_stats_profile
-    2.58 vs 2.61, pq_codebooks 6.21 vs 6.28) — the restart trades
-    late-pass heap pressure for post-restart cold-scan costs and
-    breaks round-over-round comparability of in-suite medians. Per
-    VERDICT r8 #3's alternative arm, the isolated_reprobe set is the
-    code-tracking signal (extended to the r8 in-suite movers) and the
-    recycle stays available behind SPARK_GRAFT_BENCH_RECYCLE=1."""
-    _reset_caches(spark)
-    spark.stop()
-    E._STAGED_CACHE.clear()  # stale handles from the stopped session
-    fresh = get_spark(
-        "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    fresh.range(1_000_000).selectExpr("sum(id)").collect()
-    qs["pricing_summary"](fresh, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return fresh
-
-
 def _heavy_probes(spark) -> dict[str, float]:
     """One run each of the two HEAVY calibration probes (same bodies
     as calibration(), single iteration): cheap enough (~4 s) to
@@ -430,18 +392,15 @@ def _heavy_probes(spark) -> dict[str, float]:
 
 
 def run_suite(spark, qs):
-    """One cold pass + STEADY_PASSES steady passes, with an OPTIONAL
-    mid-pass session recycle behind SPARK_GRAFT_BENCH_RECYCLE=1
-    (default off per the measured r9 outcome — see _recycle_session).
-    The two heavy calibration probes run at the start, midpoint, and
-    end of EVERY pass (outside the per-entry timed regions) so host
-    drift during the suite separates numerically from suite-context
-    and code effects within one artifact (VERDICT r9 #1). Returns
-    (per-query median of steady passes, all per-pass dicts [cold
-    first], per-pass probe triplets, live session)."""
+    """One cold pass + STEADY_PASSES steady passes. The two heavy
+    calibration probes run at the start, midpoint, and end of EVERY
+    pass (outside the per-entry timed regions) so host drift during
+    the suite separates numerically from suite-context and code
+    effects within one artifact (VERDICT r9 #1). Returns (per-query
+    median of steady passes, all per-pass dicts [cold first],
+    per-pass probe triplets)."""
     passes: list[dict[str, float]] = []
     probes: list[dict[str, dict[str, float]]] = []
-    recycle = os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "0") == "1"
     mid = len(HEADLINE) // 2
     for _ in range(1 + STEADY_PASSES):
         _reset_caches(spark)
@@ -449,8 +408,6 @@ def run_suite(spark, qs):
         p: dict[str, dict[str, float]] = {"start": _heavy_probes(spark)}
         for i, name in enumerate(HEADLINE):
             if i == mid:
-                if recycle:
-                    spark = _recycle_session(spark, qs)
                 p["mid"] = _heavy_probes(spark)
             _jvm_gc(spark)
             t0 = time.perf_counter()
@@ -466,7 +423,7 @@ def run_suite(spark, qs):
         name: round(statistics.median(p[name] for p in steady), 3)
         for name in HEADLINE
     }
-    return med, passes, probes, spark
+    return med, passes, probes
 
 
 def calibration(spark) -> dict[str, float]:
@@ -825,7 +782,7 @@ def main() -> None:
     # suite hasn't polluted yet (that's the point of the section)
     isolated = isolated_reprobe(spark, qs)
 
-    med, passes, inline_probes, spark = run_suite(spark, qs)
+    med, passes, inline_probes = run_suite(spark, qs)
     total = round(sum(med.values()), 3)
 
     # ... and AGAIN in the suite-polluted session (VERDICT r9 #1):

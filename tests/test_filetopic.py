@@ -183,26 +183,20 @@ def test_null_key_records_still_partition_deterministically(spark, tmp_path):
     assert a == b  # same inputs -> same layout, null keys included
 
 
-def test_full_topology_via_topics(spark, tmp_path, monkeypatch):
-    """The reference's complete agent graph executed through topics:
-    raw_reviews -> (dedup + gauntlet) -> cleaned_reviews /
-    quality_issues -> windowed stats — with batch-path parity on the
-    accepted set (one expression library, two execution modes, a
-    broker in between)."""
+GOOD = (
+    "The food here was absolutely wonderful and the service was quick. "
+    "I would definitely come back with friends for the weekend brunch."
+)
+
+
+def _topology_input(spark):
+    """40 reviews spanning > 8 days (so the 7-day stats watermark
+    finalizes windows), planted gauntlet failures, and one duplicate
+    (review_id, date)."""
     from datetime import datetime, timedelta
 
-    from pyspark.sql import functions as F
-
-    from yelp_streaming_etl_pipeline_spark.operators.gauntlet import (
-        clean_reviews,
-    )
     from yelp_streaming_etl_pipeline_spark.schemas import RAW_REVIEW
-    from yelp_streaming_etl_pipeline_spark.streaming import topology as TOP
 
-    GOOD = (
-        "The food here was absolutely wonderful and the service was quick. "
-        "I would definitely come back with friends for the weekend brunch."
-    )
     base = datetime(2026, 8, 1, 12, 0, 0)
     rows = []
     for i in range(40):
@@ -222,9 +216,15 @@ def test_full_topology_via_topics(spark, tmp_path, monkeypatch):
             )
         )
     rows.append(rows[1])  # duplicate (review_id, date)
-    src_df = spark.createDataFrame(rows, RAW_REVIEW)
+    return spark.createDataFrame(rows, RAW_REVIEW)
 
-    # trusted language columns (the fixture has none)
+
+@pytest.fixture()
+def trusted_lang(monkeypatch):
+    """The fixture has no language columns: attach trusted ones inside
+    the topology's gauntlet."""
+    from yelp_streaming_etl_pipeline_spark.streaming import topology as TOP
+
     orig = TOP.validate_reviews
     monkeypatch.setattr(
         TOP,
@@ -237,6 +237,28 @@ def test_full_topology_via_topics(spark, tmp_path, monkeypatch):
         ),
     )
 
+
+def _cleaned_ids(spark, base_dir):
+    return [
+        json.loads(bytes(r["value"]).decode())["review_id"]
+        for r in FT.read_file_topic_batch(
+            spark, f"{base_dir}/cleaned_reviews"
+        ).collect()
+    ]
+
+
+def test_full_topology_via_topics(spark, tmp_path, trusted_lang):
+    """The reference's complete agent graph executed through topics:
+    raw_reviews -> (dedup + gauntlet) -> cleaned_reviews /
+    quality_issues -> windowed stats — with batch-path parity on the
+    accepted set (one expression library, two execution modes, a
+    broker in between)."""
+    from yelp_streaming_etl_pipeline_spark.operators.gauntlet import (
+        clean_reviews,
+    )
+    from yelp_streaming_etl_pipeline_spark.streaming import topology as TOP
+
+    src_df = _topology_input(spark)
     base_dir = str(tmp_path / "broker")
     # producer: replay the source table into the raw topic
     src = str(tmp_path / "src")
@@ -259,11 +281,7 @@ def test_full_topology_via_topics(spark, tmp_path, monkeypatch):
     assert counts["hourly_stats"] > 0
 
     # batch parity on the accepted set, through TWO topic hops
-    cleaned_rec = FT.read_file_topic_batch(spark, f"{base_dir}/cleaned_reviews")
-    stream_ids = {
-        json.loads(bytes(r["value"]).decode())["review_id"]
-        for r in cleaned_rec.collect()
-    }
+    stream_ids = set(_cleaned_ids(spark, base_dir))
     batch_input = (
         src_df.dropDuplicates(["review_id", "date"])
         .withColumn("language", F.lit("en"))
@@ -287,3 +305,63 @@ def test_full_topology_via_topics(spark, tmp_path, monkeypatch):
     }
     for r in stats.collect():
         assert batch_win[(r["window_start"], r["business_id"])] == r["total"]
+
+
+def test_topology_tick_over_empty_raw_topic(spark, tmp_path, trusted_lang):
+    """A tick before anything was routed: both output topics and the
+    stats sink are still empty and count 0 (no PATH_NOT_FOUND)."""
+    from yelp_streaming_etl_pipeline_spark.streaming import topology as TOP
+
+    base_dir = str(tmp_path / "broker")
+    os.makedirs(f"{base_dir}/raw_reviews/data")  # topic exists, no record
+    assert TOP.run_topology_via_topics(spark, base_dir) == {
+        "cleaned_reviews": 0,
+        "quality_issues": 0,
+        "hourly_stats": 0,
+    }
+
+
+def test_topology_single_pass_exactly_once_replay(
+    spark, tmp_path, trusted_lang, monkeypatch
+):
+    """One query reads the raw topic and routes to both topics; a crash
+    between the two appends and a re-run without new records both
+    leave every output exactly as one clean run writes it."""
+    from yelp_streaming_etl_pipeline_spark.streaming import topology as TOP
+
+    def produce_raw(base_dir):
+        FT.produce_batch(
+            TOP.kafka_payload(_topology_input(spark), timestamp_col="date"),
+            0,
+            f"{base_dir}/raw_reviews",
+            timestamp_col="timestamp",
+        )
+
+    clean = str(tmp_path / "clean")
+    produce_raw(clean)
+    want = TOP.run_topology_via_topics(spark, clean)
+    assert sorted(os.listdir(f"{clean}/ckpt")) == ["process_reviews", "stats"]
+    assert want["cleaned_reviews"] > 0 and want["quality_issues"] > 0
+
+    # no new raw records: nothing moves, nothing is re-appended
+    assert TOP.run_topology_via_topics(spark, clean) == want
+    ids = _cleaned_ids(spark, clean)
+    assert len(ids) == len(set(ids)) == want["cleaned_reviews"]
+
+    # crash after the cleaned append, before the issues append: the
+    # restart replays the epoch, the cleaned topic skips it
+    crashed = str(tmp_path / "crashed")
+    produce_raw(crashed)
+    produce = FT.produce_batch
+
+    def crash_on_issues(batch_df, epoch_id, topic_dir, **kw):
+        if kw.get("topic") == "quality_issues":
+            raise RuntimeError("crash between the two appends")
+        return produce(batch_df, epoch_id, topic_dir, **kw)
+
+    monkeypatch.setattr(FT, "produce_batch", crash_on_issues)
+    with pytest.raises(Exception, match="crash between the two appends"):
+        TOP.run_topology_via_topics(spark, crashed)
+    monkeypatch.setattr(FT, "produce_batch", produce)
+    assert TOP.run_topology_via_topics(spark, crashed) == want
+    assert sorted(_cleaned_ids(spark, crashed)) == sorted(ids)

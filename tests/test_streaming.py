@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from yelp_streaming_etl_pipeline_spark.operators.gauntlet import clean_reviews
 from yelp_streaming_etl_pipeline_spark.schemas import RAW_REVIEW
+from yelp_streaming_etl_pipeline_spark.streaming import filetopic as FT
 from yelp_streaming_etl_pipeline_spark.streaming import topology as TOP
 
 GOOD_TEXT = (
@@ -68,16 +69,34 @@ def patched_lang(monkeypatch):
     )
 
 
-def test_topology_available_now(spark, tmp_path, patched_lang):
-    src = _write_source(spark, tmp_path)
-    counts = TOP.run_topology_available_now(
-        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt")
+def _produce_raw(spark, base_dir):
+    """The fixture rows as one epoch of the raw file topic."""
+    df = spark.createDataFrame(_reviews(), RAW_REVIEW)
+    FT.produce_batch(
+        TOP.kafka_payload(df, timestamp_col="date"),
+        0,
+        f"{base_dir}/raw_reviews",
+        timestamp_col="timestamp",
     )
+    return df
+
+
+def _topic_values(spark, topic_dir):
+    return [
+        json.loads(bytes(r["value"]).decode())
+        for r in FT.read_file_topic_batch(spark, topic_dir).collect()
+    ]
+
+
+def test_topology_available_now(spark, tmp_path, patched_lang):
+    base = str(tmp_path / "broker")
+    _produce_raw(spark, base)
+    counts = TOP.run_topology_via_topics(spark, base)
     # 41 input rows, 1 duplicate dropped -> 40 through the gauntlet
     assert counts["cleaned_reviews"] + counts["quality_issues"] >= 30
-    out = spark.read.parquet(str(tmp_path / "out" / "cleaned_reviews"))
-    assert out.filter(F.col("review_id") == "r1").count() == 1  # dedup held
-    assert set(out.columns) >= {
+    cleaned = _topic_values(spark, f"{base}/cleaned_reviews")
+    assert sum(r["review_id"] == "r1" for r in cleaned) == 1  # dedup held
+    assert set().union(*cleaned) >= {
         "review_id",
         "data_quality_score",
         "word_count",
@@ -89,19 +108,13 @@ def test_streaming_batch_parity(spark, tmp_path, patched_lang):
     """The streaming pipeline must produce the same accepted set as the
     batch gauntlet over the same (deduped) input — the key design
     property: one expression library, two execution modes."""
-    src = _write_source(spark, tmp_path)
-    TOP.run_topology_available_now(
-        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
+    base = str(tmp_path / "broker")
+    src_df = _produce_raw(spark, base)
+    TOP.run_topology_via_topics(spark, base)
     stream_ids = {
-        r["review_id"]
-        for r in spark.read.parquet(str(tmp_path / "out" / "cleaned_reviews"))
-        .select("review_id")
-        .collect()
+        r["review_id"] for r in _topic_values(spark, f"{base}/cleaned_reviews")
     }
-    batch_input = _with_lang(
-        spark.read.parquet(src).dropDuplicates(["review_id", "date"])
-    )
+    batch_input = _with_lang(src_df.dropDuplicates(["review_id", "date"]))
     accepted, _r, _i = clean_reviews(batch_input, F.current_timestamp())
     batch_ids = {r["review_id"] for r in accepted.select("review_id").collect()}
     assert stream_ids == batch_ids

@@ -1281,10 +1281,9 @@ def ivfpq_topk(
     n_centroids of it."""
     # 1. coarse assign + residuals (argmax cosine over broadcast
     # centroids via partial-agg max_by; shared with
-    # pq_kmeans_codebooks). dim = n_sub * sub by construction
-    # (_subspaces slices the full vector into n_sub sub-wide pieces),
-    # so every vector fold below unrolls into codegen'd arithmetic.
-    dim = n_sub * sub
+    # pq_kmeans_codebooks). The full-width folds here deliberately stay
+    # HOF folds (no dim): a 64-wide unroll measured 1.7x slower. Only
+    # the sub-wide folds of the later stages unroll (dim=sub).
     cent, assigned = _coarse_residuals(
         corpus, centroid_mod, id_col, vec_col
     )

@@ -193,20 +193,6 @@ def write_file_topic_keyed(
     topic via foreachBatch. Returns the DataStreamWriter, unstarted."""
     from .topology import kafka_payload
 
-    if timestamp_col:
-        # same projection kafka_payload makes, plus the event-time
-        # column (must be selected in the SAME projection — payload
-        # columns replace df's attributes)
-        payload = df.select(
-            F.col(key_col).cast("string").alias("key"),
-            F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias(
-                "value"
-            ),
-            F.col(timestamp_col).cast("timestamp_ltz").alias("_event_ts"),
-        )
-    else:
-        payload = kafka_payload(df, key_col)
-
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         produce_batch(
             batch_df,
@@ -214,10 +200,10 @@ def write_file_topic_keyed(
             topic_dir,
             topic=topic,
             n_partitions=n_partitions,
-            timestamp_col="_event_ts" if timestamp_col else None,
+            timestamp_col="timestamp" if timestamp_col else None,
         )
 
-    return payload.writeStream.foreachBatch(_apply).option(
+    return kafka_payload(df, key_col, timestamp_col).writeStream.foreachBatch(_apply).option(
         "checkpointLocation", checkpoint_dir
     )
 

@@ -17,12 +17,19 @@ concerns differ:
   watermark idiom bounds state identically (2 h of event time) and
   dedups strictly better across adjacent windows (documented
   divergence, SURVEY.md §7 hard-point 1).
+- routing: dedup and the gauntlet run ONCE per record, in one query;
+  a ``foreachBatch`` router persists each micro-batch and writes the
+  accepted rows and the exploded issues to their topics, as the
+  reference's process_reviews agent computes once and sends twice
+  (faust_app.py:131-170).
 - stats: 1-h tumbling ``window()`` agg with a 7-day watermark — the
   TTL of the reference's stats table becomes the allowed-lateness
-  bound (W4).
-- exactly-once: checkpoint + idempotent foreachBatch upsert on the
-  warehouse sink (the reference uses Kafka transactions; Spark's Kafka
-  sink is at-least-once — divergence documented, W5).
+  bound (W4). It is the second and last query (see
+  windowed_stats_stream for why it cannot share the first).
+- exactly-once: checkpoint + sinks idempotent per epoch id — the topic
+  router's two appends and the warehouse upsert (the reference uses
+  Kafka transactions; Spark's Kafka sink is at-least-once — divergence
+  documented, W5).
 - state backend: RocksDB provider (session.py), matching the
   reference's RocksDB tables (faust_app.py:25).
 
@@ -35,11 +42,14 @@ batch path and by key-salting if a hot business emerges in streaming).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.gauntlet import score_reviews, validate_reviews
 from ..schemas import RAW_REVIEW
+from . import filetopic as FT
 
 DEDUP_WATERMARK = "2 hours"  # faust_app.py:77-80 (1-h window, 2-h TTL)
 STATS_WATERMARK = "7 days"  # faust_app.py:83-91
@@ -64,8 +74,6 @@ def read_review_kafka_stream(
 ) -> DataFrame:
     """Kafka source (S5): subscribe + JSON deserialize into the typed
     schema (reference: faust_app.py:72-74, postgres_sink.py:51-58)."""
-    from .filetopic import decode_review_records
-
     raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
@@ -73,7 +81,7 @@ def read_review_kafka_stream(
         .option("startingOffsets", starting_offsets)
         .load()
     )
-    return decode_review_records(raw)
+    return FT.decode_review_records(raw)
 
 
 def deduped_stream(reviews: DataFrame) -> DataFrame:
@@ -86,28 +94,27 @@ def deduped_stream(reviews: DataFrame) -> DataFrame:
     )
 
 
-def streaming_quality_pipeline(
-    reviews: DataFrame, now=None
-) -> tuple[DataFrame, DataFrame]:
-    """The batch gauntlet applied to a (deduped) stream: returns
-    (accepted, issues) streaming DataFrames. ``now`` defaults to
-    processing time (the reference stamps utcnow at scoring,
+def staged_quality_stream(reviews: DataFrame, now=None) -> DataFrame:
+    """Gauntlet verdicts + scores over ALL rows (pre-split): the input
+    of the topology's router (streaming_quality_pipeline) and of
+    windowed_stats_stream, which needs it so rejected rows are actually
+    counted (the reference declares a ``rejected`` counter but
+    aggregates only the accepted stream, so it is forever 0 —
+    faust_app.py:88,180-183; quirk §8.4 fixed here as in the batch
+    path). ``now`` defaults to processing time — in a stream, the
+    micro-batch timestamp (the reference stamps utcnow at scoring,
     quality_engine.py:89)."""
     now = now if now is not None else F.current_timestamp()
-    validated = validate_reviews(reviews, now)
-    accepted = score_reviews(validated.filter(F.col("is_accepted")), now)
-    issues = validated.select(F.explode("issues").alias("i")).select("i.*")
-    return accepted, issues
-
-
-def staged_quality_stream(reviews: DataFrame, now=None) -> DataFrame:
-    """Gauntlet verdicts + scores over ALL rows (pre-split) — the input
-    windowed_stats_stream needs so rejected rows are actually counted
-    (the reference declares a ``rejected`` counter but aggregates only
-    the accepted stream, so it is forever 0 — faust_app.py:88,180-183;
-    quirk §8.4 fixed here as in the batch path)."""
-    now = now if now is not None else F.current_timestamp()
     return score_reviews(validate_reviews(reviews, now), now)
+
+
+def streaming_quality_pipeline(staged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split a staged frame (staged_quality_stream) into (accepted,
+    issues): the accepted rows with their scores, and one row per
+    emitted issue — the reference's two routes (faust_app.py:131-170)."""
+    accepted = staged.filter(F.col("is_accepted"))
+    issues = staged.select(F.explode("issues").alias("i")).select("i.*")
+    return accepted, issues
 
 
 def windowed_stats_stream(staged: DataFrame) -> DataFrame:
@@ -170,14 +177,23 @@ def rate_replay_stream(
     return ticks.join(indexed, "_seq").drop("_seq")
 
 
-def kafka_payload(df: DataFrame, key_col: str = "business_id") -> DataFrame:
+def kafka_payload(
+    df: DataFrame, key_col: str = "business_id", timestamp_col: str | None = None
+) -> DataFrame:
     """Keyed JSON payload projection for the Kafka sink: key =
     ``key_col`` (the reference partitions by business_id,
-    producer.py:114), value = the full row as JSON."""
-    return df.select(
+    producer.py:114), value = the full row as JSON. ``timestamp_col``
+    adds the row's event time as a ``timestamp`` column (the record
+    timestamp filetopic.produce_batch takes); it must be selected in
+    this SAME projection, because the payload columns replace df's
+    attributes."""
+    cols = [
         F.col(key_col).cast("string").alias("key"),
         F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),
-    )
+    ]
+    if timestamp_col:
+        cols.append(F.col(timestamp_col).cast("timestamp_ltz").alias("timestamp"))
+    return df.select(cols)
 
 
 def write_kafka_keyed(
@@ -202,6 +218,8 @@ def write_kafka_keyed(
     )
 
 
+
+
 def run_topology_via_topics(
     spark: SparkSession,
     base_dir: str,
@@ -211,113 +229,88 @@ def run_topology_via_topics(
     executed end to end: ``raw_reviews`` topic -> process_reviews agent
     (dedup -> gauntlet -> route) -> ``cleaned_reviews`` /
     ``quality_issues`` topics -> aggregate_stats agent (1-h tumbling
-    windows) — faust_app.py:72-91,156-177, with the file-backed topic
+    windows) — faust_app.py:72-91,101-177, with the file-backed topic
     shim standing in for the broker (swap filetopic calls for the
     kafka format options on a real cluster; payload/decode projections
     are shared either way).
 
-    Each stage runs to completion with trigger(availableNow) — the
-    batch-of-stream execution of the same always-on topology. Returns
-    per-output row counts.
+    Two queries, one per agent, each run to completion with
+    trigger(availableNow) — the batch-of-stream execution of the same
+    always-on topology:
+
+    - ``process_reviews`` is the only reader of the raw topic. Dedup,
+      validate and score run once per record in the stream (``now``
+      defaults to the micro-batch timestamp); a foreachBatch router
+      persists each micro-batch and appends its accepted rows and its
+      exploded issues to their topics under the micro-batch's epoch id.
+      Each topic skips an epoch it already committed, so a replay
+      after a crash between the two appends duplicates nothing.
+    - ``stats`` consumes the cleaned topic (see windowed_stats_stream).
+
+    Returns per-output row counts; an output that is still empty
+    counts 0.
     """
-    from . import filetopic as FT
+    cleaned_dir = f"{base_dir}/cleaned_reviews"
+    issues_dir = f"{base_dir}/quality_issues"
+    stats_dir = f"{base_dir}/out/hourly_stats"
 
-    def run(writer):
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
+    def run(writer, name: str) -> None:
+        writer.option("checkpointLocation", f"{base_dir}/ckpt/{name}").trigger(
+            availableNow=True
+        ).start().awaitTermination()
 
-    # stage 1: process_reviews — consume raw topic, dedup, gauntlet,
-    # route accepted/issues to their topics (faust_app.py:101-155)
-    raw = FT.decode_review_records(
-        FT.read_file_topic_stream(spark, f"{base_dir}/raw_reviews")
+    # stage 1: process_reviews (faust_app.py:101-170)
+    staged = staged_quality_stream(
+        deduped_stream(
+            FT.decode_review_records(
+                FT.read_file_topic_stream(spark, f"{base_dir}/raw_reviews")
+            )
+        ),
+        now,
     )
-    deduped = deduped_stream(raw)
-    accepted, issues = streaming_quality_pipeline(deduped, now)
-    accepted_schema = accepted.schema
-    run(
-        FT.write_file_topic_keyed(
-            accepted,
-            f"{base_dir}/cleaned_reviews",
-            f"{base_dir}/ckpt/cleaned",
-            key_col="business_id",  # faust_app.py:157 key
-            topic="cleaned_reviews",
-            timestamp_col="date",
-        )
-    )
-    run(
-        FT.write_file_topic_keyed(
-            issues,
-            f"{base_dir}/quality_issues",
-            f"{base_dir}/ckpt/issues",
-            key_col="review_id",
-            topic="quality_issues",
-            timestamp_col="detected_at",
-        )
-    )
+
+    def route(batch: DataFrame, epoch_id: int) -> None:
+        batch.persist()
+        try:
+            accepted, issues = streaming_quality_pipeline(batch)
+            FT.produce_batch(
+                kafka_payload(accepted, "business_id", "date"),  # faust_app.py:157
+                epoch_id,
+                cleaned_dir,
+                topic="cleaned_reviews",
+                timestamp_col="timestamp",
+            )
+            FT.produce_batch(
+                kafka_payload(issues, "review_id", "detected_at"),
+                epoch_id,
+                issues_dir,
+                topic="quality_issues",
+                timestamp_col="timestamp",
+            )
+        finally:
+            batch.unpersist()
+
+    run(staged.writeStream.foreachBatch(route), "process_reviews")
 
     # stage 2: aggregate_stats — consume the CLEANED topic (exactly the
     # reference's wiring, faust_app.py:173-177; its rejected counter is
-    # structurally 0 here for the same reason — quirk §8.4 documented)
-    cleaned = FT.read_file_topic_stream(
-        spark, f"{base_dir}/cleaned_reviews"
-    ).select(
-        F.from_json(F.col("value").cast("string"), accepted_schema).alias("r")
+    # structurally 0 here for the same reason — quirk §8.4 documented).
+    # A topic nothing was routed to yet is an empty directory.
+    for topic_dir in (cleaned_dir, issues_dir):
+        os.makedirs(f"{topic_dir}/data", exist_ok=True)
+    cleaned = FT.read_file_topic_stream(spark, cleaned_dir).select(
+        F.from_json(F.col("value").cast("string"), staged.schema).alias("r")
     ).select("r.*")
+    stats = windowed_stats_stream(cleaned)
     run(
-        windowed_stats_stream(cleaned)
-        .writeStream.outputMode("append")
+        stats.writeStream.outputMode("append")
         .format("parquet")
-        .option("path", f"{base_dir}/out/hourly_stats")
-        .option("checkpointLocation", f"{base_dir}/ckpt/stats")
+        .option("path", stats_dir),
+        "stats",
     )
 
-    counts = {
-        "cleaned_reviews": FT.read_file_topic_batch(
-            spark, f"{base_dir}/cleaned_reviews"
-        ).count(),
-        "quality_issues": FT.read_file_topic_batch(
-            spark, f"{base_dir}/quality_issues"
-        ).count(),
-        "hourly_stats": spark.read.parquet(
-            f"{base_dir}/out/hourly_stats"
-        ).count(),
+    return {
+        "cleaned_reviews": FT.read_file_topic_batch(spark, cleaned_dir).count(),
+        "quality_issues": FT.read_file_topic_batch(spark, issues_dir).count(),
+        "hourly_stats": spark.read.schema(stats.schema).parquet(stats_dir).count(),
     }
-    return counts
-
-
-def run_topology_available_now(
-    spark: SparkSession,
-    source_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> dict[str, int]:
-    """End-to-end batch-of-stream run (trigger availableNow): file
-    source -> dedup -> gauntlet -> parquet sinks for accepted/issues +
-    memory sink for stats. Returns row counts per output. This is the
-    smoke/test entry; production swaps file source/sink for Kafka/JDBC.
-    """
-    reviews = read_review_file_stream(spark, source_path)
-    deduped = deduped_stream(reviews)
-    accepted, issues = streaming_quality_pipeline(deduped)
-
-    q1 = (
-        accepted.writeStream.format("parquet")
-        .option("path", f"{out_dir}/cleaned_reviews")
-        .option("checkpointLocation", f"{checkpoint_dir}/cleaned")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2 = (
-        issues.writeStream.format("parquet")
-        .option("path", f"{out_dir}/quality_issues")
-        .option("checkpointLocation", f"{checkpoint_dir}/issues")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination()
-    q2.awaitTermination()
-    counts = {
-        "cleaned_reviews": spark.read.parquet(f"{out_dir}/cleaned_reviews").count(),
-        "quality_issues": spark.read.parquet(f"{out_dir}/quality_issues").count(),
-    }
-    return counts

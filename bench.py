@@ -334,6 +334,18 @@ def sf_from_dir(d: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
+def latest_bench_artifact(root: str) -> str | None:
+    """Path of the latest round's artifact ``BENCH_r<N>.json`` in
+    ``root``: the highest parsed round N. Core-count variants
+    (``BENCH_r<N>_c<cores>.json``) are not a round's artifact."""
+    rounds = {}
+    for name in os.listdir(root):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", name)
+        if m:
+            rounds[int(m.group(1))] = os.path.join(root, name)
+    return rounds[max(rounds)] if rounds else None
+
+
 def _jvm_gc(spark) -> None:
     """Force a JVM GC from the driver — run between queries, OUTSIDE
     the timed region, so one query's garbage can't tax the next."""
@@ -845,18 +857,9 @@ def main() -> None:
     # Additions only; the slowest-20 selection above is unchanged.
     carry: set = set()
     try:
-        import glob
-
-        prev_arts = sorted(
-            glob.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_r*.json",
-                )
-            )
-        )
-        if prev_arts:
-            with open(prev_arts[-1]) as fh:
+        prev_art = latest_bench_artifact(os.path.dirname(os.path.abspath(__file__)))
+        if prev_art:
+            with open(prev_art) as fh:
                 prev_parsed = json.load(fh).get("parsed") or {}
             carry = set((prev_parsed.get("queries") or {})) & set(med)
             for name in sorted(carry):

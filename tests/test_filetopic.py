@@ -32,6 +32,15 @@ def _reviews(spark):
     )
 
 
+def _payload(spark, n):
+    """``n`` reviews as keyed JSON payload rows (key = business_id)."""
+    reviews = _reviews(spark).limit(n).cache()
+    return reviews.select(
+        F.col("business_id").cast("string").alias("key"),
+        F.to_json(F.struct(*reviews.columns)).alias("value"),
+    )
+
+
 def _produce_stream(spark, tmp_path, reviews, topic_dir):
     src = str(tmp_path / "src")
     reviews.coalesce(1).write.mode("overwrite").parquet(src)
@@ -106,11 +115,7 @@ def test_keyed_copartitioning_and_offsets(spark, tmp_path):
 
 
 def test_offsets_monotonic_across_epochs(spark, tmp_path):
-    reviews = _reviews(spark).limit(40).cache()
-    payload = reviews.select(
-        F.col("business_id").cast("string").alias("key"),
-        F.to_json(F.struct(*reviews.columns)).alias("value"),
-    )
+    payload = _payload(spark, 40)
     topic_dir = str(tmp_path / "topic")
     n1 = FT.produce_batch(payload, 0, topic_dir, n_partitions=3)
     n2 = FT.produce_batch(payload, 1, topic_dir, n_partitions=3)
@@ -128,11 +133,7 @@ def test_offsets_monotonic_across_epochs(spark, tmp_path):
 
 
 def test_idempotent_replay_and_crash_retry(spark, tmp_path):
-    reviews = _reviews(spark).limit(30).cache()
-    payload = reviews.select(
-        F.col("business_id").cast("string").alias("key"),
-        F.to_json(F.struct(*reviews.columns)).alias("value"),
-    )
+    payload = _payload(spark, 30)
     topic_dir = str(tmp_path / "topic")
 
     assert FT.produce_batch(payload, 0, topic_dir) == 30
@@ -153,6 +154,56 @@ def test_idempotent_replay_and_crash_retry(spark, tmp_path):
     assert rec.groupBy("partition", "offset").count().filter(
         F.col("count") > 1
     ).count() == 0
+
+
+def _next_offsets(topic_dir):
+    with open(os.path.join(topic_dir, "_meta.json")) as f:
+        return {int(p): o for p, o in json.load(f)["next_offset"].items()}
+
+
+def _rows_per_partition(df):
+    return {
+        r["partition"]: r["count"] for r in df.groupBy("partition").count().collect()
+    }
+
+
+def test_produce_batch_observed_counts_advance_offsets(spark, tmp_path):
+    """The per-partition counts observed on the write are the rows the
+    epoch wrote to each partition, and next_offset advances by exactly
+    those counts epoch after epoch."""
+    payload = _payload(spark, 40)
+    topic_dir = str(tmp_path / "topic")
+    before = {p: 0 for p in range(FT.DEFAULT_PARTITIONS)}
+    for epoch_id, batch in enumerate((payload, payload.limit(25))):
+        n = FT.produce_batch(batch, epoch_id, topic_dir)
+        written = _rows_per_partition(
+            spark.read.schema(FT.TOPIC_RECORD).parquet(
+                os.path.join(topic_dir, "data", f"e{epoch_id:020d}")
+            )
+        )
+        after = _next_offsets(topic_dir)
+        assert n == sum(written.values()) == batch.count()
+        assert after == {p: before[p] + written.get(p, 0) for p in before}
+        before = after
+    assert before == _rows_per_partition(FT.read_file_topic_batch(spark, topic_dir))
+    assert FT.topic_size(topic_dir) == 65
+
+
+def test_produce_batch_empty_epoch_commits(spark, tmp_path):
+    """An empty input appends nothing but still commits its epoch id,
+    so a replay of that epoch stays a no-op."""
+    payload = _payload(spark, 20)
+    topic_dir = str(tmp_path / "topic")
+    assert FT.topic_size(topic_dir) == 0  # no _meta.json yet
+    assert FT.produce_batch(payload, 0, topic_dir) == 20
+    offsets = _next_offsets(topic_dir)
+    assert FT.produce_batch(payload.limit(0), 1, topic_dir) == 0
+    assert _next_offsets(topic_dir) == offsets
+    with open(os.path.join(topic_dir, "_meta.json")) as f:
+        assert json.load(f)["epochs"] == [0, 1]
+    assert FT.produce_batch(payload, 1, topic_dir) == 0  # replay: no-op
+    assert _next_offsets(topic_dir) == offsets
+    assert FT.read_file_topic_batch(spark, topic_dir).count() == 20
 
 
 def test_null_key_records_still_partition_deterministically(spark, tmp_path):
@@ -342,6 +393,7 @@ def test_topology_single_pass_exactly_once_replay(
     want = TOP.run_topology_via_topics(spark, clean)
     assert sorted(os.listdir(f"{clean}/ckpt")) == ["process_reviews", "stats"]
     assert want["cleaned_reviews"] > 0 and want["quality_issues"] > 0
+    _assert_counts_are_topic_sizes(spark, clean, want)
 
     # no new raw records: nothing moves, nothing is re-appended
     assert TOP.run_topology_via_topics(spark, clean) == want
@@ -365,3 +417,57 @@ def test_topology_single_pass_exactly_once_replay(
     monkeypatch.setattr(FT, "produce_batch", produce)
     assert TOP.run_topology_via_topics(spark, crashed) == want
     assert sorted(_cleaned_ids(spark, crashed)) == sorted(ids)
+    _assert_counts_are_topic_sizes(spark, crashed, want)
+
+
+def _assert_counts_are_topic_sizes(spark, base_dir, counts):
+    for name in ("cleaned_reviews", "quality_issues"):
+        topic_dir = f"{base_dir}/{name}"
+        assert counts[name] == FT.read_file_topic_batch(spark, topic_dir).count()
+
+
+def _last_job_id(spark):
+    """Newest job id in the AppStatusStore (it lists jobs newest first)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30000)
+    it = sc.statusStore().jobsList(spark.sparkContext._gateway.jvm.java.util.ArrayList()).iterator()
+    return it.next().jobId() if it.hasNext() else -1
+
+
+def test_steady_tick_jobs_and_routed_epochs(spark, tmp_path, trusted_lang):
+    """A steady tick (a new raw epoch whose dates advance the dedup
+    watermark) runs a bounded number of Spark jobs, and the router's
+    watermark-advance micro-batch appends no epoch to either topic."""
+    from yelp_streaming_etl_pipeline_spark.streaming import topology as TOP
+
+    base_dir = str(tmp_path / "broker")
+    first = _topology_input(spark)
+    later = first.withColumn("review_id", F.concat(F.lit("n"), "review_id")).withColumn(
+        "date", F.col("date") + F.expr("INTERVAL 10 DAYS")
+    )
+    for epoch_id, reviews in enumerate((first, later)):
+        FT.produce_batch(
+            TOP.kafka_payload(reviews, timestamp_col="date"),
+            epoch_id,
+            f"{base_dir}/raw_reviews",
+            timestamp_col="timestamp",
+        )
+        seen = _last_job_id(spark)
+        counts = TOP.run_topology_via_topics(spark, base_dir)
+        jobs = _last_job_id(spark) - seen
+    print(f"steady tick: {jobs} Spark jobs")
+    # router data batch: isEmpty and two one-job appends; router
+    # watermark-advance batch: isEmpty; stats: one job per micro-batch
+    # and two for the hourly_stats count
+    assert jobs <= 8
+
+    commits = f"{base_dir}/ckpt/process_reviews/commits"
+    batches = sorted(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert batches == [0, 1, 2, 3]  # data, watermark advance, per tick
+    for name in ("cleaned_reviews", "quality_issues"):
+        topic_dir = f"{base_dir}/{name}"
+        with open(os.path.join(topic_dir, "_meta.json")) as f:
+            epochs = json.load(f)["epochs"]
+        assert epochs == [0, 2]
+        assert sorted(os.listdir(f"{topic_dir}/data")) == [f"e{e:020d}" for e in epochs]
+    _assert_counts_are_topic_sizes(spark, base_dir, counts)

@@ -37,11 +37,12 @@ EXECUTES in tests and in the oracle gate:
   decode logic written against the real Kafka source —
   ``decode_review_records`` — works against either unchanged.
 
-At scale: producing is one hash-partition shuffle of the batch (the
-same shuffle the Kafka sink's network partitioner implies); offset
-bookkeeping is O(partitions) driver-side JSON, the role a broker's
-partition leader plays. Consuming is a plain file stream — each
-epoch directory's files split across executors like any parquet scan.
+At scale: producing is one write with one hash-partition shuffle of
+the batch (the same shuffle the Kafka sink's network partitioner
+implies); offset bookkeeping is O(partitions) driver-side JSON, the
+role a broker's partition leader plays. Consuming is a plain file
+stream — each epoch directory's files split across executors like any
+parquet scan.
 """
 
 from __future__ import annotations
@@ -50,7 +51,7 @@ import json
 import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -99,6 +100,13 @@ def _write_meta(topic_dir: str, meta: dict) -> None:
     os.replace(tmp, p)
 
 
+def topic_size(topic_dir: str) -> int:
+    """Records committed to the topic: the sum of its per-partition end
+    offsets (``next_offset``), what a broker reports without reading a
+    record. A topic with no commit yet has size 0."""
+    return sum(int(o) for o in _read_meta(topic_dir, 0)["next_offset"].values())
+
+
 def assign_partition(key, value, n_partitions: int):
     """Keyed partitioner: pmod(hash(key), n); null key hashes value."""
     h = F.when(key.isNull(), F.hash(value)).otherwise(F.hash(key))
@@ -116,6 +124,11 @@ def produce_batch(
     """Append one micro-batch (columns ``key``/``value`` as string or
     binary, optionally ``timestamp_col``) to the topic. Returns rows
     appended (0 when the epoch was already committed).
+
+    One action, the offset-assigning write: it observes the rows it
+    writes per partition (``DataFrame.observe``), and those counts
+    advance ``next_offset`` in the commit. An empty input writes an
+    empty epoch and commits its id.
 
     Idempotent by construction: a committed epoch id is a no-op, and
     a retry of an uncommitted epoch overwrites its own subdirectory,
@@ -147,10 +160,6 @@ def produce_batch(
     # committed high-water mark. Within an epoch the order is pinned by
     # (key, value) bytes so replays and tests see identical offsets —
     # an epoch is one atomic append, so any serial order is valid.
-    counts = {
-        str(r["partition"]): r["c"]
-        for r in rec.groupBy("partition").agg(F.count("*").alias("c")).collect()
-    }
     base = F.create_map(
         *[
             x
@@ -166,12 +175,18 @@ def produce_batch(
         "offset",
         base[F.col("partition")] + F.row_number().over(w) - F.lit(1),
     ).select([f.name for f in TOPIC_RECORD.fields])
+    # the per-partition row counts ride along the write (no count job)
+    counts = Observation()
+    out = out.observe(
+        counts,
+        *[F.count_if(F.col("partition") == p).alias(str(p)) for p in range(n_partitions)],
+    )
 
     epoch_dir = os.path.join(topic_dir, "data", f"e{epoch_id:020d}")
     out.write.mode("overwrite").parquet(epoch_dir)
 
     appended = 0
-    for p, c in counts.items():
+    for p, c in counts.get.items():
         meta["next_offset"][p] = int(meta["next_offset"].get(p, 0)) + int(c)
         appended += int(c)
     meta["epochs"].append(epoch_id)

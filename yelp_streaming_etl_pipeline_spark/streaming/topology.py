@@ -21,7 +21,8 @@ concerns differ:
   a ``foreachBatch`` router persists each micro-batch and writes the
   accepted rows and the exploded issues to their topics, as the
   reference's process_reviews agent computes once and sends twice
-  (faust_app.py:131-170).
+  (faust_app.py:131-170). A micro-batch without rows (the one that
+  only advances the dedup watermark) appends nothing.
 - stats: 1-h tumbling ``window()`` agg with a 7-day watermark — the
   TTL of the reference's stats table becomes the allowed-lateness
   bound (W4). It is the second and last query (see
@@ -244,11 +245,15 @@ def run_topology_via_topics(
       persists each micro-batch and appends its accepted rows and its
       exploded issues to their topics under the micro-batch's epoch id.
       Each topic skips an epoch it already committed, so a replay
-      after a crash between the two appends duplicates nothing.
+      after a crash between the two appends duplicates nothing. A
+      micro-batch without rows (the dedup watermark advancing, or only
+      duplicates) still runs, so dedup state is evicted and committed,
+      but appends no epoch to either topic.
     - ``stats`` consumes the cleaned topic (see windowed_stats_stream).
 
     Returns per-output row counts; an output that is still empty
-    counts 0.
+    counts 0. The two topics' counts are their committed end offsets
+    (filetopic.topic_size), read without scanning a record.
     """
     cleaned_dir = f"{base_dir}/cleaned_reviews"
     issues_dir = f"{base_dir}/quality_issues"
@@ -272,6 +277,9 @@ def run_topology_via_topics(
     def route(batch: DataFrame, epoch_id: int) -> None:
         batch.persist()
         try:
+            # no rows (the watermark-advance batch): nothing to append
+            if batch.isEmpty():
+                return
             accepted, issues = streaming_quality_pipeline(batch)
             FT.produce_batch(
                 kafka_payload(accepted, "business_id", "date"),  # faust_app.py:157
@@ -310,7 +318,7 @@ def run_topology_via_topics(
     )
 
     return {
-        "cleaned_reviews": FT.read_file_topic_batch(spark, cleaned_dir).count(),
-        "quality_issues": FT.read_file_topic_batch(spark, issues_dir).count(),
+        "cleaned_reviews": FT.topic_size(cleaned_dir),
+        "quality_issues": FT.topic_size(issues_dir),
         "hourly_stats": spark.read.schema(stats.schema).parquet(stats_dir).count(),
     }
